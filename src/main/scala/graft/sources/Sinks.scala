@@ -136,15 +136,13 @@ object Sinks {
 
   /** Incremental write: replaces ONLY the partitions present in `df`,
     * leaving the rest of the table untouched (idempotent re-run of one
-    * day's batch). */
-  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+    * day's batch). The mode is a per-write option, not the session conf,
+    * so writes running concurrently in the same session keep their own
+    * overwrite mode. */
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
 }

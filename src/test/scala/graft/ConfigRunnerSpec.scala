@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{GraftConfig, Runner}
@@ -109,5 +113,110 @@ class ConfigRunnerSpec extends SparkSpec {
     val pr = spark.read.parquet(s"$out/mobility/zone_pagerank")
     val mass = pr.agg(org.apache.spark.sql.functions.sum("pr")).head().getDouble(0)
     assert(math.abs(mass - 1.0) < 1e-3, s"rank mass $mass")
+  }
+
+  private def runnerThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.filter(_.isAlive).map(_.getName)
+      .filter(_.startsWith("graft")).toSet
+
+  test("runner: all four stages — counts match the files, stageFrames order, no cache left") {
+    val out = Files.createTempDirectory("graft_run_all").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out\n" +
+        "stages = medallion,scoring,monitoring,mobility\n"))
+    spark.catalog.clearCache()
+    val written = Runner.run(spark, cfg)
+    assert(spark.sharedState.cacheManager.isEmpty, "run must release its silver pin")
+    assert(written.map(_._1) === Runner.stageFrames(spark, cfg).map(_._1))
+    assert(written.size === 26)
+    written.foreach { case (name, rows) =>
+      assert(rows === spark.read.parquet(s"$out/$name").count(), s"$name row count")
+    }
+  }
+
+  test("runner: zero-row events write every medallion table with 0 rows") {
+    val in = Files.createTempDirectory("graft_run_empty_in").toString
+    val out = Files.createTempDirectory("graft_run_empty_out").toString
+    spark.read.parquet(s"$sfDir/events.parquet").limit(0)
+      .write.parquet(s"$in/events.parquet")
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $in\npaths.output = $out\nstages = medallion\n"))
+    val written = Runner.run(spark, cfg)
+    assert(written.size === 10)
+    assert(written.forall(_._2 == 0L), s"non-zero counts: $written")
+  }
+
+  test("runner: write jobs keep the caller's job group and name their table") {
+    val out = Files.createTempDirectory("graft_run_tags").toString
+    val cfg = GraftConfig.load(writeProps(
+      s"paths.input = $sfDir\npaths.output = $out\nstages = medallion\n"))
+    val jobs = ArrayBuffer.empty[(Option[String], Option[String])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.synchronized { jobs += prop("spark.jobGroup.id") -> prop("spark.job.description") }
+      }
+    }
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, "caller")
+      try body finally sc.clearJobGroup()
+    }
+    val groups = Seq("graft-runner-spec-a", "graft-runner-spec-b")
+    sc.addSparkListener(listener)
+    val written = try {
+      // planning alone reads the input's schema (a job on the caller's thread)
+      inGroup("graft-runner-spec-plan")(Runner.stageFrames(spark, cfg))
+      // two calls under two groups: a pool outliving the first call would
+      // tag the second call's jobs with the first group
+      groups.map(g => inGroup(g)(Runner.run(spark, cfg)))
+    } finally {
+      // listener events arrive in order: once the marker job is seen,
+      // every job run submitted has been seen too
+      inGroup("graft-runner-spec-marker")(spark.range(1).collect())
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.synchronized(jobs.exists(_._1.contains("graft-runner-spec-marker"))) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      sc.removeSparkListener(listener)
+    }
+    val seen = jobs.synchronized(jobs.toSeq)
+    assert(seen.forall(_._1.isDefined), s"jobs outside any group: $seen")
+    val planJobs = seen.count(_._1.contains("graft-runner-spec-plan"))
+    groups.zip(written).foreach { case (g, w) =>
+      val (writeJobs, callerJobs) = seen.filter(_._1.contains(g))
+        .partition(_._2.exists(_.startsWith("graft.Runner write ")))
+      // only planning runs on the caller's thread; every other job is a
+      // table's write and says which table
+      assert(callerJobs.size <= planJobs, s"$g: jobs not tagged with a table: $callerJobs")
+      assert(writeJobs.flatMap(_._2).map(_.stripPrefix("graft.Runner write ")).toSet ===
+        w.map(_._1).toSet, g)
+    }
+  }
+
+  test("runner: a failed write surfaces after in-flight writes end, threads gone, pin released") {
+    val out = Files.createTempDirectory("graft_run_fail").toString
+    spark.catalog.clearCache()
+    val threadsBefore = runnerThreads()
+    val shared = spark.range(0, 2000, 1, 4).toDF("id")
+    val frames = Seq(
+      "ok_a" -> shared.withColumn("sq", col("id") * col("id")),
+      "bad" -> shared.withColumn("boom",
+        when(col("id") === 1500, raise_error(lit("graft-runner-spec failure")))
+          .otherwise(col("id"))),
+      "ok_b" -> shared.groupBy((col("id") % 7).as("k")).count(),
+      "ok_c" -> shared.filter(col("id") > 10),
+      "ok_d" -> shared.select(col("id").cast("string").as("s")),
+      "ok_e" -> shared.limit(3))
+    val e = intercept[Exception] { Runner.writeTables(shared, frames, out) }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => Option(x.getMessage).exists(_.contains("graft-runner-spec failure"))), e)
+    assert(runnerThreads() === threadsBefore, "no write thread may outlive the call")
+    assert(spark.sharedState.cacheManager.isEmpty, "the pin must be released on failure")
+    // a frame the caller cached is not the call's to release
+    val cached = spark.range(10).toDF("id").cache()
+    try {
+      assert(Runner.writeTables(cached, Seq("t" -> cached), out) === Seq("t" -> 10L))
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally cached.unpersist()
   }
 }

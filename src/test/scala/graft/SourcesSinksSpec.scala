@@ -120,6 +120,25 @@ class SourcesSinksSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 3)
   }
 
+  test("overwritePartitions: dynamic per write, session overwrite mode left untouched") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_sink_conf").toString
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("id", "event_date")
+        .write.mode("overwrite").partitionBy("event_date").parquet(out)
+      Sinks.overwritePartitions(Seq((3L, "2024-01-02")).toDF("id", "event_date"),
+        out, Seq("event_date"))
+      assert(spark.conf.get(key) === "static")
+      // dynamic despite the static session: day 1 survives
+      val back = spark.read.parquet(out).orderBy("id")
+        .select(col("id"), col("event_date").cast("string")).as[(Long, String)]
+      assert(back.collect().toSeq === Seq((1L, "2024-01-01"), (3L, "2024-01-02")))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("compaction: oversplit partitions coalesce, healthy partitions untouched, rows identical") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_compact").toString
