@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON result line on stdout.
   *
@@ -17,45 +15,10 @@ import org.apache.spark.sql.SparkSession
   *     code nonzero — a broken query can never masquerade as a fast one.
   */
 object Bench {
-  /** Materialize EVERY output column: a bare count() lets Catalyst prune
-    * unused columns, so map-only queries would be timed as row-count scans
-    * instead of real work. Hashing the full row defeats pruning. MAP
-    * columns are not hashable (undefined entry order) — serialize through
-    * to_json any column whose type TRANSITIVELY contains a map (a bare
-    * `array<map<…>>` or `struct<…, map, …>` fails xxhash64 analysis just
-    * like a top-level map would); everything else hashes natively. */
-  private[graft] def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: MapType => true
-      case a: ArrayType => containsMap(a.elementType)
-      case s: StructType => s.fields.exists(f => containsMap(f.dataType))
-      case _ => false
-    }
-  }
-
-  private def force(df: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, count, to_json, xxhash64}
-    val cols = df.schema.fields.map { f =>
-      if (containsMap(f.dataType)) to_json(col(f.name))
-      else col(f.name)
-    }
-    df.agg(count(xxhash64(cols.toIndexedSeq: _*))).head()
-    ()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]", cpus)
 
     // Local-iteration filter (comma-separated keys): time just the queries
     // under work instead of the whole surface. The driver never sets it —
@@ -97,7 +60,7 @@ object Bench {
       val times = (1 to 2).flatMap { _ =>
         val t0 = System.nanoTime()
         try {
-          force(fn(spark, sfDir))
+          Harness.force(fn(spark, sfDir))
           Some((System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
           errors += (name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200))

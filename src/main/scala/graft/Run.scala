@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.{GraftConfig, Runner}
 
 /** Config-file-driven pipeline main:
@@ -29,16 +27,8 @@ object Run {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: graft.Run <config.properties>")
     val cfg = GraftConfig.load(args(0))
-    val spark = SparkSession.builder()
-      .appName(cfg.appName)
-      .master(cfg.master)
-      .config("spark.sql.shuffle.partitions", cfg.shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", cfg.timezone)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cfg.master, cfg.shufflePartitions.toString,
+      cfg.timezone, cfg.appName, logLevel = "WARN")
     try {
       val written = Runner.run(spark, cfg)
       written.foreach { case (name, rows) => println(f"$name%-40s $rows%10d rows") }

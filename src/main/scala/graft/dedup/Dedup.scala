@@ -936,7 +936,6 @@ object Dedup {
     * [[decontaminate]] is the faster identical-output path. */
   def bloomDecontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int = 3,
       minOverlap: Int = 5, fpp: Double = 0.01): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val key = xxhash64(lower(col("text")))
     // null-text guard: xxhash64 maps NULL to its seed (a real long) where
     // decontaminate's md5 yields NULL (anti-join keeps the row) — filter
@@ -992,7 +991,6 @@ object Dedup {
     * QUANTIFIED leak probability — never an unmeasured one. */
   def embeddingDecontaminate(corpus: DataFrame, benchmark: DataFrame,
       minCosine: Double = 0.95): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val b = benchmark.select(col("vec_id").as("bench_id"), col("embedding").as("b_emb"))
     val hits = corpus.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(b))
@@ -1025,7 +1023,6 @@ object Dedup {
     * lowest shared cell. */
   def semanticDedup(emb: DataFrame, threshold: Double = 0.35, nlist: Int = 16,
       nprobe: Int = 2, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val cents = graft.similarity.Similarity.kmeansFit(emb, nlist, iters)
     val assigned = emb.select(col("vec_id"), col("embedding"),
       explode(graft.similarity.Similarity.nearestCells(cents, nprobe)).as("cell"))
@@ -1063,7 +1060,6 @@ object Dedup {
     * sampled slice, exactly as [[lshEval]] prescribes. */
   def semanticBlockingEval(emb: DataFrame, threshold: Double = 0.35,
       nPlanes: Int = 4, tables: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("embedding"))
     // one scan per join SIDE (not per table per side): every table's
     // (t, bucket) pair computes in a single projection and explodes,
@@ -1105,7 +1101,6 @@ object Dedup {
   }
 
   def embeddingNearDups(emb: DataFrame, threshold: Double = 0.35): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.alias("a")
       .join(emb.alias("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))

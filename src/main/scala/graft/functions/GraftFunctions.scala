@@ -2,18 +2,21 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.Shims.{column, expression}
 
-/** Registration + Column-API surface for graft's native expressions.
+/** Column-API + SQL-name surface for graft's native expressions.
   *
-  * Two registration paths:
-  *   - [[GraftFunctions.register]] — imperative, idempotent; graft
-  *     operators call it on their input's own session, so library users
-  *     need no setup.
-  *   - [[GraftExtensions]] — the SparkSessionExtensions injector for
-  *     cluster-wide deployment (`spark.sql.extensions=graft.functions.GraftExtensions`),
-  *     making the functions available to pure-SQL users too.
+  * The Column functions build their Catalyst expressions directly, so
+  * they work on any session with no setup. SQL names come from ONE table
+  * of validating builders ([[sqlFunctions]]), installed either way:
+  *   - [[GraftExtensions]] — the SparkSessionExtensions injector
+  *     (`spark.sql.extensions=graft.functions.GraftExtensions`), for
+  *     every session built with it;
+  *   - [[GraftFunctions.register]] — the same names into one existing
+  *     session.
+  * Both also add the HOF-cosine rewrite rule
+  * ([[graft.plans.CosineRewriteRule]]).
   */
 object GraftFunctions {
 
@@ -41,17 +44,13 @@ object GraftFunctions {
 
   private def bloomBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, s"$bloomName expects 2 arguments, got ${exprs.length}")
-    org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs.head, exprs(1))
+    BloomFilterMightContain(exprs.head, exprs(1))
   }
 
   private def lnBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, s"$lnName expects 1 argument, got ${exprs.length}")
     NativeLog(exprs.head)
   }
-
-  /** [[pqCodesBuilder]] exposed for the extensions injector. */
-  private[functions] def pqCodesExprBuilder: Seq[Expression] => Expression =
-    pqCodesBuilder
 
   private def pqCodesBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2 || exprs.length == 3,
@@ -71,39 +70,40 @@ object GraftFunctions {
     PqCodes(exprs.head, books, unitize)
   }
 
-  /** Register graft functions into an existing session (idempotent), plus
-    * the HOF-cosine auto-acceleration rule (see
-    * [[graft.plans.CosineRewriteRule]]) via experimental
-    * extraOptimizations — the per-session counterpart of the
-    * [[GraftExtensions]] injector. */
+  private def entry(name: String, cls: Class[_], builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Every SQL name with its validating builder: the one table both
+    * [[register]] and [[GraftExtensions]] install. */
+  private[functions] val sqlFunctions = Seq(
+    entry(cosineName, classOf[CosineSimilarity], cosineBuilder),
+    entry(bucketName, classOf[HyperplaneBuckets], bucketBuilder),
+    entry(bloomName, classOf[BloomFilterMightContain], bloomBuilder),
+    entry(lnName, classOf[NativeLog], lnBuilder),
+    entry(pqCodesName, classOf[PqCodes], pqCodesBuilder))
+
+  /** Add graft's SQL names to an existing session, skipping any it
+    * already has (so a session built with [[GraftExtensions]] is left
+    * as it is), plus the HOF-cosine rewrite rule via experimental
+    * extraOptimizations. The Column functions below do not need it. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      cosineName, cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      bucketName, bucketBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      bloomName, bloomBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      lnName, lnBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      pqCodesName, pqCodesBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
     if (!spark.experimental.extraOptimizations.contains(graft.plans.CosineRewriteRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.CosineRewriteRule
   }
 
-  /** Codegen'd one-pass cosine similarity between two array columns. The
-    * caller's DataFrame session must have graft functions registered;
-    * operators that use this call [[register]] themselves. */
-  def cosineSim(a: Column, b: Column): Column = call_function(cosineName, a, b)
+  /** Codegen'd one-pass cosine similarity between two array columns. */
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
   /** Codegen'd one-pass hyperplane-LSH bucket id (all plane dot products
-    * in a single fused loop — see [[HyperplaneBuckets]]). Same
-    * registration contract as [[cosineSim]]. */
+    * in a single fused loop — see [[HyperplaneBuckets]]). */
   def hyperplaneBucket(emb: Column, nPlanes: Int, planeOffset: Int): Column =
-    call_function(bucketName, emb,
-      org.apache.spark.sql.functions.lit(nPlanes),
-      org.apache.spark.sql.functions.lit(planeOffset))
+    column(HyperplaneBuckets(expression(emb), nPlanes, planeOffset))
 
   /** Codegen'd Bloom-filter membership probe over a serialized
     * `org.apache.spark.util.sketch.BloomFilter` (the format
@@ -111,65 +111,36 @@ object GraftFunctions {
     * `BloomFilterMightContain` runtime-filter expression surfaced as a
     * library function. `value` must be a LONG key (hash the probe column
     * with `xxhash64(...)` using the SAME expression that keyed the
-    * sketch build). Same registration contract as [[cosineSim]]. */
+    * sketch build). */
   def bloomContains(filterBytes: Column, value: Column): Column =
-    call_function(bloomName, filterBytes, value)
+    column(BloomFilterMightContain(expression(filterBytes), expression(value)))
 
   /** Fused PQ code assignment over a unit-vector column — all m subspace
     * argmaxes in one native per-row loop (see [[PqCodes]] for the
     * bit-exactness contract vs the expression-forest formulation it
-    * replaces). `books` rides as one array literal. Same registration
-    * contract as [[cosineSim]]. */
+    * replaces). */
   def pqCodes(unitVec: Column, books: Array[Array[Array[Double]]]): Column =
-    call_function(pqCodesName, unitVec,
-      org.apache.spark.sql.functions.typedLit(books.map(_.map(_.toSeq).toSeq).toSeq))
+    column(PqCodes(expression(unitVec), books))
 
   /** [[pqCodes]] over the RAW `array<float|double>` embedding: the L2
     * normalization folds into the kernel, bit-identical to
     * `unitCol → pqCodes` (see [[PqCodes]]'s `unitize` contract). Use on
     * the corpus/scan side: without the interpreted `transform`/`aggregate`
     * HOFs in the projection the encode stage stays in whole-stage
-    * codegen. Same registration contract as [[cosineSim]]. */
+    * codegen. */
   def pqCodesRaw(rawVec: Column, books: Array[Array[Array[Double]]]): Column =
-    call_function(pqCodesName, rawVec,
-      org.apache.spark.sql.functions.typedLit(books.map(_.map(_.toSeq).toSeq).toSeq),
-      org.apache.spark.sql.functions.lit(true))
+    column(PqCodes(expression(rawVec), books, unitize = true))
 
   /** Natural log via the intrinsified `Math.log` — see [[NativeLog]] for
     * why this beats the built-in `log` (StrictMath) when the output faces
-    * a cross-engine exact compare. Same registration contract as
-    * [[cosineSim]]. */
-  def nativeLn(x: Column): Column = call_function(lnName, x)
+    * a cross-engine exact compare. */
+  def nativeLn(x: Column): Column = column(NativeLog(expression(x)))
 }
 
 /** `spark.sql.extensions` injector (see [[GraftFunctions]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.cosineName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, GraftFunctions.cosineName),
-      exprs => CosineSimilarity(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.bucketName),
-      new ExpressionInfo(classOf[HyperplaneBuckets].getName, GraftFunctions.bucketName),
-      exprs => HyperplaneBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.bloomName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        GraftFunctions.bloomName),
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.lnName),
-      new ExpressionInfo(classOf[NativeLog].getName, GraftFunctions.lnName),
-      exprs => NativeLog(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.pqCodesName),
-      new ExpressionInfo(classOf[PqCodes].getName, GraftFunctions.pqCodesName),
-      GraftFunctions.pqCodesExprBuilder))
+    GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
     // portable HOF cosine → fused native kernel, for every session query
     ext.injectOptimizerRule(_ => graft.plans.CosineRewriteRule)
     // SQL DELETE/UPDATE/MERGE on USING graft tables (see GraftSqlDml)

@@ -66,7 +66,6 @@ object Monitoring {
     * summed as ×10⁶ rounded integer images (order-independent) and
     * divided once — psi is an exact sum of 1e-6-quantized terms. */
   def psi(df: DataFrame, cols: Seq[String], splitDate: String, bins: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val bPct = greatest(col("b_cnt") / col("b_tot"), lit(1e-6))
     val cPct = greatest(col("c_cnt") / col("c_tot"), lit(1e-6))
     val term = (cPct - bPct) * graft.functions.GraftFunctions.nativeLn(cPct / bPct)

@@ -33,7 +33,6 @@ object Similarity {
 
   /** Exact top-k neighbors per query vector (correctness baseline). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
@@ -54,7 +53,6 @@ object Similarity {
     * LSH/IVF candidate generators and apply the same threshold. */
   def radiusSearch(corpus: DataFrame, queries: DataFrame,
       minCosine: Double = 0.3): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
     c.crossJoin(broadcast(q))
@@ -72,10 +70,9 @@ object Similarity {
     * Delegates to the native codegen'd expression
     * ([[graft.functions.HyperplaneBuckets]]): ONE fused loop computes all
     * plane dots, vs one interpreted HOF fold per plane — the cost gap
-    * grows with the auto-scaled plane count. The session must have graft
-    * functions registered ([[graft.functions.GraftFunctions.register]];
-    * [[lshTopK]] does it for callers). The expression reads the vector
-    * dimension from the array itself — no dim parameter to get wrong. */
+    * grows with the auto-scaled plane count. The expression reads the
+    * vector dimension from the array itself — no dim parameter to get
+    * wrong. */
   def bucketCol(emb: Column, nPlanes: Int, planeOffset: Int = 0): Column =
     graft.functions.GraftFunctions.hyperplaneBucket(emb, nPlanes, planeOffset)
 
@@ -147,7 +144,6 @@ object Similarity {
     * window runs per label. Rank-based rather than threshold-based so the
     * output is meaningful on any corpus without tuning. */
   def labelOutliers(corpus: DataFrame, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val cents = corpus
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .groupBy("label", "dim").agg(avg(col("v")).as("m"))
@@ -203,11 +199,6 @@ object Similarity {
 
   def kmeansFit(corpus: DataFrame, nlist: Int = 16, iters: Int = 2,
       seeds: Option[Array[Array[Double]]] = None): Array[Array[Double]] = {
-    // self-register the native cosine (idempotent): cellOf's assignment
-    // column resolves graft_cosine_sim at analysis time, and relying on a
-    // PREVIOUS query having registered it makes the call order-dependent
-    // (bit us when a key rename shuffled the Verify iteration order)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // accept array<float|double> like every other embedding consumer
     // (CosineSimilarity/HyperplaneBuckets); the dimension comes from the
     // vectors themselves, not a parameter that could disagree with them
@@ -361,7 +352,6 @@ object Similarity {
     * cell plus its cosine to the winning centroid — shuffle-free (the
     * centroids ride along as literals in a codegen'd projection). */
   def kmeansAssign(corpus: DataFrame, cents: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // ONE argmax struct supplies both columns — two parallel greatest()
     // trees would duplicate every centroid-cosine expression
     val best = bestCentroid(cents)
@@ -373,8 +363,6 @@ object Similarity {
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-
     val cents = kmeansFit(corpus, nlist, iters)
 
     val c = corpus.select(col("vec_id").as("neighbor_id"),
@@ -423,7 +411,6 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       nPlanes: Int = 0, tables: Int = 4, targetBucket: Int = 64,
       probes: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val np = if (nPlanes > 0) nPlanes else autoPlanes(corpus.count(), targetBucket)
     // ONE corpus scan for ALL tables: every table's (t, bucket) pair is
     // computed in a single projection and exploded, instead of a
@@ -566,7 +553,6 @@ object Similarity {
     * collecting k×(D/m) means — KB-sized at any corpus size. */
   def pqFit(corpus: DataFrame, m: Int = 4, k: Int = 16,
       iters: Int = 2, seeds: Option[Array[Array[Double]]] = None): Array[Array[Array[Double]]] = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // seeds: ONE collect of the k lowest-vec_id RAW vectors (shareable
     // with the k-means seed collect in composed fits), unit-normalized
     // driver-side (bit-identical to unitCol — see [[unitize]]) and
@@ -615,7 +601,6 @@ object Similarity {
     * materialization) for the sequential pair it replaces. */
   private[graft] def fitIvfPq(corpus: DataFrame, nlist: Int, m: Int,
       kCent: Int, iters: Int): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val seeds = seedRows(corpus, math.max(nlist, kCent))
     var cents = seeds.take(nlist)
     val seedRaw = seeds.take(kCent)
@@ -640,7 +625,6 @@ object Similarity {
     * instead of D floats (64×4 = 256 bytes here); a shuffle-free,
     * codegen'd projection. */
   def pqEncode(corpus: DataFrame, books: Array[Array[Array[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     pqCodeCols(corpus, books)
   }
 
@@ -744,7 +728,6 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 4, kCent: Int = 16,
       iters: Int = 2, refine: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // one seed collect + one fused job per round fits both halves
     val (cents, books) = fitIvfPq(corpus, nlist, m, kCent, iters)
     // the standing index: (id, cell, m codes) via the CSE'd projections
@@ -804,7 +787,6 @@ object Similarity {
   def buildAnnIndex(corpus: DataFrame, path: String, nlist: Int = 16,
       m: Int = 4, kCent: Int = 16, iters: Int = 2): Unit = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // one seed collect + one fused job per round fits both halves
     val (cents, books) = fitIvfPq(corpus, nlist, m, kCent, iters)
     val dsub = books.head.head.length
@@ -857,7 +839,6 @@ object Similarity {
   def queryAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       corpus: DataFrame, queries: DataFrame, k: Int = 5, nprobe: Int = 4,
       refine: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (cents, books) = loadModel(spark, path)
     val m = books.length
     val index = spark.read.parquet(s"$path/index")

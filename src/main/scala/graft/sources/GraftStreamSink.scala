@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.streaming.OutputMode
 
 /** `df.writeStream.format("graft").start(path)` — the versioned table
@@ -54,7 +54,7 @@ final class GraftStreamSink(spark: SparkSession, path: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // the engine hands an incrementally-planned frame that batch
     // writers refuse — re-wrap its rows as a plain batch frame
-    val batch = GraftBridge.batchDf(spark, data.queryExecution.toRdd, data.schema)
+    val batch = Shims.batchDf(spark, data.queryExecution.toRdd, data.schema)
     // the streaming query id IS the txn appId (Delta's choice): stable
     // across restarts of the same checkpointed query, distinct across
     // queries

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.StructType
 
 /** `spark.readStream.format("graft").load(path)` — the versioned table
@@ -267,7 +267,7 @@ final class GraftStreamSource(spark: SparkSession, path: String,
       else align(VersionedTable.readVersion(spark, path, anchor)).limit(0)
     // the v1 contract: getBatch's frame must be streaming-tagged; the
     // already-planned batch plan is wrapped via its InternalRow RDD
-    GraftBridge.streamingDf(spark, batch.queryExecution.toRdd, schema0)
+    Shims.streamingDf(spark, batch.queryExecution.toRdd, schema0)
   }
 
   override def stop(): Unit = ()

@@ -111,7 +111,6 @@ object TextFunctions {
     *   bm25  = ln((N − df + 0.5)/(df + 0.5) + 1) ·
     *           tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) */
   def tfidfBm25(docs: DataFrame, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val ln = graft.functions.GraftFunctions.nativeLn _
     val toksDf = docs.select(col("doc_id"),
       explode(filter(toks(col("text")), t => t =!= "")).as("token"))
@@ -145,7 +144,6 @@ object TextFunctions {
     * round-8 exact gate caught a last-ulp drift per doc) while the
     * integer images add exactly in any order; the mean divides once. */
   def unigramLogProb(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toksDf = docs.select(col("doc_id"),
       explode(filter(toks(col("text")), t => t =!= "")).as("token"))
     val vocab = toksDf.groupBy("token").agg(count(lit(1)).as("tf"))
@@ -570,7 +568,6 @@ object TextFunctions {
     // not just the ones surviving minCount — so it attaches BEFORE the
     // minCount filter; n_uni rides the word_a marginal side.
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     bigrams
       .withColumn("n_bg", sum(col("pair_count")).over(wAll))
       .filter(col("pair_count") >= minCount)

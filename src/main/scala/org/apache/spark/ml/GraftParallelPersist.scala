@@ -47,9 +47,16 @@ object GraftParallelPersist {
           t
         }))
 
-  /** Save `model` under `path` (overwriting), stages in parallel. */
+  /** Save `model` under `path` (overwriting), stages in parallel. Every
+    * stage must be [[MLWritable]]; that is checked before anything at
+    * `path` is deleted, so a model that cannot be saved leaves the
+    * previous one in place. */
   def save(model: PipelineModel, spark: SparkSession, path: String): Unit = {
     implicit val ec: ExecutionContext = pool
+    model.stages.find(!_.isInstanceOf[MLWritable]).foreach { s =>
+      throw new UnsupportedOperationException(
+        s"cannot save pipeline: stage ${s.uid} of type ${s.getClass} is not MLWritable")
+    }
     val fsPath = new Path(path)
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(fsPath)) { fs.delete(fsPath, true); () }

@@ -397,7 +397,6 @@ class DedupSpec extends SparkSpec {
     val t = 0.35
     val sem = Dedup.semanticDedup(emb, threshold = t).select("vec_a", "vec_b", "cosine").cache()
     // exact ground truth: unblocked all-pairs above the same threshold
-    graft.functions.GraftFunctions.register(spark)
     val exact = emb.alias("a")
       .join(emb.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
@@ -422,7 +421,6 @@ class DedupSpec extends SparkSpec {
     val (nCand, tp, fn) = (row.getAs[Long]("n_cand"), row.getAs[Long]("tp"), row.getAs[Long]("fn"))
     // tp + fn is EXACTLY the true pair count (fp = 0 by construction:
     // predicted pairs are cosine-post-filtered candidates)
-    graft.functions.GraftFunctions.register(spark)
     val nTrue = emb.alias("a")
       .join(emb.alias("b"), col("a.vec_id") < col("b.vec_id"))
       .filter(graft.functions.GraftFunctions.cosineSim(col("a.embedding"), col("b.embedding")) >= 0.35)
@@ -450,7 +448,6 @@ class DedupSpec extends SparkSpec {
     val t = 0.4
     val kept = Dedup.embeddingDecontaminate(corpus, bench, minCosine = t).cache()
     // ground truth: brute-force cosine hits
-    graft.functions.GraftFunctions.register(spark)
     val hits = corpus.alias("c").join(bench.alias("b"),
         graft.functions.GraftFunctions.cosineSim(col("c.embedding"), col("b.embedding")) >= t)
       .select(col("c.vec_id")).distinct().cache()

@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Row, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftExtensions, GraftFunctions}
+import graft.functions.GraftFunctions._
+import graft.similarity.Similarity
 
 class FunctionsSpec extends SparkSpec {
 
   test("native cosine matches the HOF fold bit-for-bit on real embeddings") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val pairs = emb.alias("a").join(emb.alias("b"),
       col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
@@ -24,7 +26,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites portable HOF cosine into the native kernel, floats untouched") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.Column
     // parquet-backed, not a local Seq — ConvertToLocalRelation would
@@ -52,7 +53,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native cosine participates in whole-stage codegen and evals interpreted too") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f)), (Array(1.0f, 0.0f), Array(0.0f, 1.0f)))
       .toDF("a", "b")
@@ -72,7 +72,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("native hyperplane bucket matches the per-plane HOF folds exactly") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val dim = 64
     // the reference formulation this expression replaced: one fold per plane
@@ -102,7 +101,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("bloom contains: zero false negatives, fpp-bounded false positives, SQL-callable") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val keys = spark.range(0, 1000L).select(xxhash64(col("id")).as("h"))
     val bf = keys.stat.bloomFilter("h", 1000L, 0.03)
@@ -128,13 +126,64 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("function is SQL-callable after registration and via extensions injector") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
+    // a fresh session: its SQL names come from GraftExtensions alone, so
+    // no register() call from an earlier test can mask what it installs
+    val fresh = spark.newSession()
+    import fresh.implicits._
     Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f))).toDF("a", "b").createOrReplaceTempView("v")
-    val c = spark.sql(s"SELECT ${GraftFunctions.cosineName}(a, b) AS c FROM v")
-      .head().getDouble(0)
-    assert(math.abs(c - 1.0) < 1e-15)
+    def check(): Unit = {
+      val c = fresh.sql(s"SELECT $cosineName(a, b) AS c FROM v").head().getDouble(0)
+      assert(math.abs(c - 1.0) < 1e-15)
+      // arity and literal errors name the function: the extensions and
+      // register() share one table of validating builders
+      val arity = intercept[IllegalArgumentException](
+        fresh.sql(s"SELECT $cosineName(a) FROM v").collect())
+      assert(arity.getMessage.contains(s"$cosineName expects 2 arguments"), arity.getMessage)
+      val notLiteral = intercept[IllegalArgumentException](
+        fresh.sql(s"SELECT $bucketName(a, size(a), 0) FROM v").collect())
+      assert(notLiteral.getMessage.contains("must be a literal"), notLiteral.getMessage)
+    }
+    check()
+    // register() skips the names the session already has
+    GraftFunctions.register(fresh)
+    check()
     // the extensions injector accepts our function tuple without error
     new GraftExtensions().apply(new SparkSessionExtensions)
+  }
+
+  test("Column API works on a session with no graft function registered") {
+    val bare = spark.newSession()
+    val registry = bare.sessionState.functionRegistry
+    val names = Seq(cosineName, bucketName, bloomName, lnName, pqCodesName).map(FunctionIdentifier(_))
+    names.foreach(registry.dropFunction)
+    assert(names.forall(!registry.functionExists(_)))
+    val bloom = {
+      val bf = spark.range(0, 50L).select(xxhash64(col("id")).as("h")).stat.bloomFilter("h", 50L, 0.03)
+      val b = new java.io.ByteArrayOutputStream(); bf.writeTo(b); b.toByteArray
+    }
+    val books = Array.tabulate(2, 4, 32)((s, c, d) => math.sin(100.0 * s + 10.0 * c + d))
+    def native(s: SparkSession): Seq[Row] =
+      Tables.embeddings(s, sfDir).filter(col("vec_id") < 100)
+        .select(col("vec_id"),
+          cosineSim(col("embedding"), reverse(col("embedding"))),
+          hyperplaneBucket(col("embedding"), 6, 3),
+          bloomContains(lit(bloom), xxhash64(col("vec_id"))),
+          pqCodesRaw(col("embedding"), books),
+          nativeLn(col("vec_id").cast("double")))
+        .orderBy("vec_id").collect().toSeq
+    def topK(s: SparkSession): Seq[Row] = {
+      val emb = Tables.embeddings(s, sfDir)
+      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5))
+        .orderBy("query_id", "neighbor_id").collect().toSeq
+    }
+    assert(native(bare) === native(spark))
+    assert(topK(bare) === topK(spark))
+    // same auto-name as the registered SQL function
+    val named = Tables.embeddings(bare, sfDir)
+      .select(col("embedding").as("a"), col("embedding").as("b"))
+      .select(cosineSim(col("a"), col("b")))
+    assert(named.columns.toSeq === Seq(s"$cosineName(a, b)"))
+    // nothing re-registered the names behind the caller's back
+    assert(names.forall(!registry.functionExists(_)))
   }
 }

@@ -92,6 +92,28 @@ class ModelsSpec extends SparkSpec {
     assert(b.exceptAll(a).count() === 0)
   }
 
+  test("parallel save refuses a non-writable stage before replacing a saved model") {
+    import org.apache.spark.ml.{GraftParallelPersist, Pipeline, Transformer}
+    import org.apache.spark.ml.feature.SQLTransformer
+    import org.apache.spark.ml.param.ParamMap
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import org.apache.spark.sql.types.StructType
+    val path = java.nio.file.Files.createTempDirectory("graft_persist").resolve("model").toString
+    val df = spark.range(3).toDF("id")
+    val saved = new Pipeline().setStages(Array(
+      new SQLTransformer().setStatement("SELECT id * 2 AS x FROM __THIS__"))).fit(df)
+    GraftParallelPersist.save(saved, spark, path)
+    val unsaveable = new Pipeline().setStages(Array(new Transformer {
+      override val uid: String = "not_writable"
+      override def transform(ds: Dataset[_]): DataFrame = ds.toDF()
+      override def transformSchema(schema: StructType): StructType = schema
+      override def copy(extra: ParamMap): Transformer = this
+    })).fit(df)
+    intercept[UnsupportedOperationException](GraftParallelPersist.save(unsaveable, spark, path))
+    val reloaded = GraftParallelPersist.load(spark, path)
+    assert(reloaded.transform(df).orderBy("x").collect().map(_.getLong(0)).toSeq === Seq(0L, 2L, 4L))
+  }
+
   test("quality classifier: AUC beats naive on a planted garbage stratum") {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
@@ -193,7 +215,7 @@ class ModelsSpec extends SparkSpec {
     // key-sorted JSON so the string is deterministic
     val view = graft.ml.Experiments.runsScalarView(runs)
     assert(view.count() === 2)
-    assert(view.schema.fields.forall(f => !Bench.containsMap(f.dataType)),
+    assert(view.schema.fields.forall(f => !Harness.containsMap(f.dataType)),
       "gate view must contain no map types")
     val pj = view.filter(col("model") === "random_forest")
       .select("params_json").head().getString(0)

@@ -7,10 +7,7 @@ import graft.similarity.Similarity
 class SimilaritySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.01"
-  private lazy val emb = {
-    graft.functions.GraftFunctions.register(spark) // bucketCol is native now
-    Tables.embeddings(spark, dir).cache()
-  }
+  private lazy val emb = Tables.embeddings(spark, dir).cache()
   private lazy val queries = emb.filter(col("vec_id") < 10)
 
   test("brute force: exactly k neighbors per query, ranked by cosine") {
